@@ -11,27 +11,9 @@ import org.apache.spark.sql.SparkSession
 object LeakProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val tmp = sys.env.getOrElse("SPARK_GRAFT_TMPDIR",
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
-      else System.getProperty("java.io.tmpdir"))
-    new java.io.File(tmp).mkdirs()
-    System.setProperty("java.io.tmpdir", tmp)
-    val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "64k"))
-      // generated-code cache sized for a many-query engine run (see
-      // Bench.scala) — static conf, mirrored so every main runs the
-      // identical engine configuration
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "8192"))
-      .config("spark.local.dir", tmp)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val tmp = sys.env.getOrElse("SPARK_GRAFT_TMPDIR", EngineSession.shmDir("graft-bench"))
+    val spark = EngineSession.build(tmp)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.geo.GeoFunctions.ensureRegistered(spark)
     val streamQ = args.lift(0).getOrElse("s22_stream_pmi")
     val batchQ = args.lift(1).getOrElse("d10_corpus_clean")
     val rounds = args.lift(2).map(_.toInt).getOrElse(8)

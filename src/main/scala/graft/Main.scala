@@ -127,18 +127,11 @@ object Main {
     case Left(err) =>
       System.err.println(s"[main] error: $err"); System.err.println(usage); 2
     case Right(args) =>
-      val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("graft-pipeline"))
-        .getOrCreate()
+      val spark = EngineSession.build()
       spark.sparkContext.setLogLevel(args.logLevel match {
         case "DEBUG" => "DEBUG"; case "INFO" => "INFO"; case "WARNING" => "WARN"
         case "ERROR" => "ERROR"; case other => other
       })
-      graft.geo.GeoFunctions.ensureRegistered(spark)
       val store = new DataStore(args.root)
       try {
         val ok = args.mode match {

@@ -58,19 +58,8 @@ object StreamSweep {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val big = sys.env.getOrElse("SPARK_GRAFT_SWEEP_DIR", "/tmp/graft_sf1")
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_SWEEP_BUDGET_S", "180").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val tmp = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-sweep"
-      else System.getProperty("java.io.tmpdir")
-    new java.io.File(tmp).mkdirs()
-    System.setProperty("java.io.tmpdir", tmp)
-    val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", tmp)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = EngineSession.build(EngineSession.shmDir("graft-sweep"))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.geo.GeoFunctions.ensureRegistered(spark)
 
     if (!new java.io.File(s"$big/lineitem.parquet").exists)
       ScaleSweep.buildScaled(spark, base, big, copies = 10)

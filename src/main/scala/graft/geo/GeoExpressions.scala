@@ -294,15 +294,14 @@ object GeoExpressions {
 }
 
 /**
- * SparkSessionExtensions installer:
- * `SparkSession.builder().withExtensions(new GraftExtensions)` — or
- * `--conf spark.sql.extensions=graft.geo.GraftExtensions` on
- * spark-submit — injects EVERYTHING the library adds to a session into
- * every session on the cluster: the ST_ geometry family, the native
- * text kernels (ws_token_count/simhash64/winnow_keys/normalize_text/
- * jaro_winkler), and the broadcast spatial-join planner strategy. This
- * is the one hook a cluster operator configures (README "Deploying on a
- * real cluster"); nothing else needs per-session registration calls.
+ * SparkSessionExtensions installer, applied by [[graft.EngineSession]] to
+ * every session the mains build (or by
+ * `--conf spark.sql.extensions=graft.geo.GraftExtensions` on a session
+ * built elsewhere): injects EVERYTHING the library adds to a session into
+ * that session and every `newSession()` of it: the ST_ geometry family,
+ * the native text kernels (ws_token_count/simhash64/winnow_keys/
+ * normalize_text/jaro_winkler), and the broadcast spatial-join planner
+ * strategy. Nothing else needs per-session registration calls.
  */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {

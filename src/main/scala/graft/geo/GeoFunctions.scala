@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
  * function registry) — no Scala-UDF serialization boundary, null-intolerant
  * short-circuiting for free, and join conditions written with these
  * wrappers are recognized by `graft.plans.SpatialJoinStrategy`. Sessions
- * built with [[GraftExtensions]] have the family pre-registered; any other
- * session just needs one [[ensureRegistered]] call (idempotent, and invoked
- * by the engine's own entry points).
+ * built with [[GraftExtensions]] — every [[graft.EngineSession]] — have the
+ * family in their registry and in every `newSession()` of them; a session
+ * built any other way needs one [[ensureRegistered]] call (idempotent), and
+ * its sub-sessions one more each.
  *
  * The hot broadcast-spatial-join path deliberately does NOT go through
  * per-row wrappers — see graft.ops.SpatialJoin, which prepares JTS objects
@@ -34,7 +35,6 @@ object GeoFunctions {
 
   /** Column sugar over the native expression family. */
   def st_geomFromWKT(c: Column): Column = call_function("st_geomfromwkt", c)
-  def st_asWKT(c: Column): Column = call_function("st_aswkt", c)
   def st_point(lon: Column, lat: Column): Column = call_function("st_point", lon, lat)
   def st_intersects(a: Column, b: Column): Column = call_function("st_intersects", a, b)
   def st_within(a: Column, b: Column): Column = call_function("st_within", a, b)

@@ -100,9 +100,6 @@ class DataStore(root: String,
     Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
   }
 
-  def readCsv(spark: SparkSession, rel: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path(rel))
-
   /**
    * Per-threshold file fan-out in ONE pass (SURVEY.md §7.4): write
    * `partitionBy(partitionCol)` once, then rename each partition's part

@@ -38,7 +38,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `NioLocalFs` is the default checksummed `FileContext` binding over the
   * same raw FS (`fs.AbstractFileSystem.file.impl`). Layouts, `.crc`
   * siblings and rename semantics are byte-identical to stock Hadoop.
-  * Both are opt-out via SPARK_GRAFT_NIO_LOCAL_FS=0 in the mains.
+  * Every [[graft.EngineSession]] binds both; a deployment keeps stock
+  * Hadoop by setting the two `spark.hadoop.fs.*file.impl` keys itself.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -144,17 +145,16 @@ class NioLocalFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new NioRawLocalFs(uri, conf))
 
 object NioLocalFs {
-  /** Bind the `file` scheme (FileSystem + FileContext APIs) to the
-    * shell-free local FS. Applied identically by every main so bench,
-    * verify and profiling run the same engine; opt out with
-    * SPARK_GRAFT_NIO_LOCAL_FS=0. Must be set at builder time — Hadoop
-    * caches FileSystem instances per scheme on first use. */
+  /** The session settings binding the `file` scheme (FileSystem +
+    * FileContext APIs) to the shell-free local FS. Part of every
+    * [[graft.EngineSession]]; they must be set before the context starts —
+    * Hadoop caches FileSystem instances per scheme on first use. */
+  val settings: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+
+  /** [[settings]] on a builder, for sessions built outside EngineSession. */
   def configure(b: org.apache.spark.sql.SparkSession.Builder)
       : org.apache.spark.sql.SparkSession.Builder =
-    if (sys.env.get("SPARK_GRAFT_NIO_LOCAL_FS").contains("0")) b
-    else b
-      .config("spark.hadoop.fs.file.impl",
-        classOf[NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[NioLocalFs].getName)
+    settings.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 }

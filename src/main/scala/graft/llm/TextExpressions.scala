@@ -224,8 +224,9 @@ object TextKernels {
  * Native Catalyst text expressions WITH `doGenCode` (§2.9): unlike the geo
  * family (CodegenFallback is right there — the work is inside JTS either
  * way), these are leaf-level scans over the string payload where staying in
- * generated code eliminates the per-row UDF boundary entirely. Registered as
- * `ws_token_count` / `simhash64` next to the ST_ family.
+ * generated code eliminates the per-row UDF boundary entirely. Injected by
+ * [[graft.geo.GraftExtensions]] as `ws_token_count` / `simhash64` / ...
+ * next to the ST_ family.
  */
 object TextExpressions {
 
@@ -359,19 +360,11 @@ object TextExpressions {
     "aho_count" -> (es => AhoMatchCount(es.head,
       foldableStringArray(es(1), "aho_count patterns"))))
 
+  /** Register the text family on a session built without
+    * [[graft.geo.GraftExtensions]] (idempotent); such temp functions do not
+    * reach its `newSession()` sub-sessions. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     registry.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
     }
-
-  /** Best-effort self-registration so the Column helpers work without the
-    * caller invoking ensureRegistered: temp-function registrations do NOT
-    * propagate to `newSession()` clones, so every DataFrame-taking operator
-    * registers on ITS OWN session and the Column-only helpers register on
-    * the active one. */
-  private[llm] def ensureOn(df: org.apache.spark.sql.DataFrame): Unit =
-    register(df.sparkSession)
-
-  private[llm] def ensureActive(): Unit =
-    org.apache.spark.sql.SparkSession.getActiveSession.foreach(register)
 }

@@ -31,9 +31,10 @@ import org.locationtech.jts.index.strtree.STRtree
  * [[graft.ops.SpatialJoin.quadkeyRefineJoin]], the shuffle-based
  * filter-refine join for two large sides.
  *
- * Activate on a live session with
- * `spark.experimental.extraStrategies = Seq(SpatialJoinStrategy)`
- * or for all sessions via [[graft.geo.GraftExtensions]].
+ * Installed once per session, when it is built, by
+ * [[graft.geo.GraftExtensions]] (every [[graft.EngineSession]], or
+ * `spark.sql.extensions` on a cluster); queries never add it to a running
+ * session, whose later queries would then plan differently.
  */
 object SpatialJoinStrategy extends SparkStrategy {
 

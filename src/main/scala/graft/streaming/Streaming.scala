@@ -68,15 +68,17 @@ object Streaming {
     * ordered-batch gate/bench (s16/s19/ScaleBench); keep mtime handling
     * here so a fix lands once. */
   def writeOrderedMicrobatch(df: DataFrame, inDir: String, b: Int): Unit = {
-    val stage = java.nio.file.Files.createTempDirectory("graft-mb").toString
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"no part file under $stage"))
-    val dir = new java.io.File(inDir); dir.mkdirs()
-    val dest = new java.io.File(dir, s"b$b.parquet")
-    java.nio.file.Files.move(part.toPath, dest.toPath)
-    dest.setLastModified((b + 1) * 1000000000L)
+    val stage = java.nio.file.Files.createTempDirectory("graft-mb")
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      val part = stage.toFile.listFiles()
+        .find(_.getName.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException(s"no part file under $stage"))
+      val dir = new java.io.File(inDir); dir.mkdirs()
+      val dest = new java.io.File(dir, s"b$b.parquet")
+      java.nio.file.Files.move(part.toPath, dest.toPath)
+      dest.setLastModified((b + 1) * 1000000000L)
+    } finally graft.util.TempDirs.deleteRecursively(stage)
   }
 
   /** File-source stream over a directory of parquet drops. `glob` narrows

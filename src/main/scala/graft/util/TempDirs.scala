@@ -33,7 +33,8 @@ object TempDirs {
     p.toString
   }
 
-  private def deleteRecursively(root: java.nio.file.Path): Unit = {
+  /** Best-effort recursive delete (a missing root is a no-op). */
+  private[graft] def deleteRecursively(root: java.nio.file.Path): Unit = {
     if (java.nio.file.Files.exists(root)) {
       try {
         java.nio.file.Files.walk(root)

@@ -3,29 +3,27 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per JVM). */
+/** Shared local SparkSession for all suites (one per JVM): the engine
+  * session every main builds, so all suites exercise the engine's actual
+  * configuration, extensions and file scheme. */
 object TestSpark {
+  /** The suite's declared departures from the engine defaults. */
+  val overrides: Map[String, String] = Map(
+    "spark.master" -> "local[4]",
+    "spark.sql.shuffle.partitions" -> "4",
+    // bucketed-table suites write managed tables; keep them out of the repo
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString,
+    // Pin the AT-SCALE plan shapes for every suite: Spread.ifNarrow
+    // fires only in the single-small-file regime (a no-op on
+    // production-partitioned input), so plan-shape budgets assert the
+    // plan a real corpus gets. Results are spread-invariant; SpreadSpec
+    // toggles this to cover the narrow-regime behaviour.
+    "spark.graft.spread" -> "false")
+
   lazy val spark: SparkSession = {
-    // shell-free local FS, same binding as every main (graft.io.NioLocalFs)
-    // so all suites exercise the engine's actual file scheme
-    val s = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table suites write managed tables; keep them out of the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      // Pin the AT-SCALE plan shapes for every suite: Spread.ifNarrow
-      // fires only in the single-small-file regime (a no-op on
-      // production-partitioned input), so plan-shape budgets assert the
-      // plan a real corpus gets. Results are spread-invariant; SpreadSpec
-      // toggles this to cover the narrow-regime behaviour.
-      .config("spark.graft.spread", "false"))
-      .getOrCreate()
+    val s = EngineSession.build(overrides = overrides)
     s.sparkContext.setLogLevel("WARN")
-    graft.geo.GeoFunctions.ensureRegistered(s)
     s
   }
 }

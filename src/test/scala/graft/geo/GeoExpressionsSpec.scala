@@ -7,8 +7,6 @@ class GeoExpressionsSpec extends SparkSpec {
 
   import spark.implicits._
 
-  GeoExpressions.register(spark)
-
   test("SQL-registered ST functions evaluate like the kernel") {
     val row = spark.sql(
       """SELECT

@@ -1,15 +1,12 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.geo.{Geo, GeoExpressions, GeoFunctions}
+import graft.geo.{Geo, GeoFunctions}
 import org.apache.spark.sql.functions._
 
 class SpatialJoinStrategySpec extends SparkSpec {
 
   import spark.implicits._
-
-  GeoExpressions.register(spark)
-  spark.experimental.extraStrategies = Seq(SpatialJoinStrategy)
 
   private def boxes(n: Int, seed: Int, pfx: String) = {
     val rng = new scala.util.Random(seed)

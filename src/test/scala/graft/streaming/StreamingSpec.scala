@@ -8,6 +8,18 @@ class StreamingSpec extends SparkSpec {
 
   import spark.implicits._
 
+  test("writeOrderedMicrobatch leaves no staging dir in the temp dir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staged(): Int = Option(tmp.list()).map(_.count(_.startsWith("graft-mb"))).getOrElse(0)
+    val before = staged()
+    val in = java.nio.file.Files.createTempDirectory("graft-drops").toString
+    Streaming.writeOrderedMicrobatch(spark.range(0, 3).toDF("id"), in, 0)
+    Streaming.writeOrderedMicrobatch(spark.range(3, 6).toDF("id"), in, 1)
+    assert(staged() == before)
+    assert(new java.io.File(in).list().sorted.toSeq == Seq("b0.parquet", "b1.parquet"))
+    assert(spark.read.parquet(in).count() == 6)
+  }
+
   test("file-source stream with AvailableNow converges to the batch answer") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
     val events = Seq(
